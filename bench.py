@@ -191,13 +191,9 @@ def _steady_run(spark, c, page_rows, shuffle_parts: int,
     fetched = c._fetch(frontier, 0)
     pages_ok = fetched.filter(F.col("status") == "ok")
     bodies = pages_ok.select(F.col("page_url").alias("url"), "body", "seq")
-    page_meta = pages_ok.select("page_url", F.col("seq").alias("parent_seq"),
-                                "depth")
     seen = spark.createDataFrame([], "dedup_key string")
     processed = process_pages_df(bodies, host, "")
-    spans = (processed.select("url", F.explode("refs").alias("r"))
-             .select("url", "r.*"))
-    cands = c._base_candidates(spans, page_meta)
+    cands = c._candidates(processed, 0)
     inserts, _surv = admit(cands, seen, host, 0, [], [])
 
     n_inserts = inserts.count()        # untimed: codegen + JIT + plan
@@ -402,9 +398,6 @@ def _steady_worker(master: str, n_pages: int, shuffle_parts: int) -> None:
             # url hash; a second full-body shuffle was pure IO
             bodies = pages_ok.select(F.col("page_url").alias("url"),
                                      "body", "seq")
-            page_meta = pages_ok.select("page_url",
-                                        F.col("seq").alias("parent_seq"),
-                                        "depth")
             seen = spark.createDataFrame([], "dedup_key string")
             t0 = time.time()
             # the FUSED per-page pass (extract + sniff + rewrite + output
@@ -412,9 +405,7 @@ def _steady_worker(master: str, n_pages: int, shuffle_parts: int) -> None:
             # stage in the real loop; its checkpoint is the epoch state
             processed = process_pages_df(bodies, host, "") \
                 .localCheckpoint(eager=True)
-            spans = (processed.select("url", F.explode("refs").alias("r"))
-                     .select("url", "r.*"))
-            cands = c._base_candidates(spans, page_meta)
+            cands = c._candidates(processed, 0)
             inserts, _surv = admit(cands, seen, host, 0, [], [])
             n_inserts = inserts.count()
             dt = time.time() - t0

@@ -145,7 +145,8 @@ def minhash_signatures(df: DataFrame, id_col: str = "doc_id",
             sigs = []
             for ws in pdf["_ws"]:
                 if ws is None:
-                    sigs.append(None)
+                    # null text: num_perm NULL mins, like _minhash_sig
+                    sigs.append([None] * num_perm)
                     continue
                 toks = list(ws)
                 k = len(toks) - 2

@@ -32,12 +32,11 @@ from being shuffled against small candidate sets; AQE handles residual skew.
 
 from __future__ import annotations
 
-import os
 import time
 from dataclasses import dataclass, field
 from typing import Iterator
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -97,6 +96,10 @@ class Crawler:
     reference's own test seam) or, with ``live=True``, the real per-host
     HTTP fetch stage (sources/fetch.py) — same engine either way."""
 
+    # collapse the seen/written union chains into one checkpointed table
+    # every K epochs (bounded per-epoch plan depth)
+    compact_every = 16
+
     def __init__(self, spark: SparkSession, config: CrawlConfig,
                  pages: DataFrame | None = None, use_bloom: bool = False,
                  checkpoint=None, max_epochs: int = 1000,
@@ -144,10 +147,9 @@ class Crawler:
             self._rebuild_rfc_rules()
         self.checkpoint = checkpoint
         self.max_epochs = max_epochs
-        # collapse the seen/written union chains into one checkpointed
-        # table every K epochs (bounded per-epoch plan depth)
-        self.compact_every = int(os.environ.get(
-            "GOSCRAPE_COMPACT_EVERY", "16"))
+        # exact row count of the loop's `written` table (observed on each
+        # written_delta checkpoint) — gates the broadcast fileExists join
+        self._written_rows = 0
         # per-label cumulative checkpoint wall times: every epoch stage is
         # materialized through _localckpt, so this doubles as a stage-level
         # attribution table (bench.py emits it into BENCH_FULL)
@@ -426,39 +428,79 @@ class Crawler:
             else:
                 self.bloom.add_keys_df(seen)  # rebuild from committed table
 
-        fetch_logs: list[DataFrame] = []
-        documents: list[DataFrame] = []
-        outputs: list[DataFrame] = []
         default_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
         # the loop re-sets shuffle.partitions per epoch; stages that size
         # their own shuffles (sitemap bootstrap) need the session default
         self._default_parts = default_parts
-        # AQE is disabled for the LOOP's duration (restored after): the loop
-        # sizes every shuffle from per-epoch data volume itself, the
-        # post-aggregation join keys are unique (first-wins/fileExists
-        # groups — nothing for AQE's skew split to do), and the mock joins
-        # are explicitly gated broadcasts — so AQE's per-query-stage job
-        # submissions only added driver latency (measured r6: 39.8 -> 18.3
-        # jobs/epoch, wall flat-to-better; OPTIMIZATION_r06.md).  At
-        # production scale per-epoch jobs amortize and AQE back on is fine:
-        # GOSCRAPE_LOOP_AQE=1 keeps it enabled.
-        aqe_prev = None
-        if os.environ.get("GOSCRAPE_LOOP_AQE", "0") == "0":
-            aqe_prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-            spark.conf.set("spark.sql.adaptive.enabled", "false")
 
         # filesystem state for the fileExists asset skip
         # (scraper/download.go:76-79): one row per already-written path
         written = spark.createDataFrame([], "file_path string")
-        # safe OVERestimate of written's row count (pages + allowed assets
-        # accumulated per epoch) — gates the broadcast fileExists anti-join
-        self._written_rows = 0
         if resumed is not None and self.checkpoint is not None:
             w = self.checkpoint.resume_written(spark)
             if w is not None:
                 written = w
                 self._written_rows = written.count()
 
+        # AQE is disabled for the LOOP's duration: the loop sizes every
+        # shuffle from per-epoch data volume itself, the post-aggregation
+        # join keys are unique (first-wins/fileExists groups — nothing for
+        # AQE's skew split to do), and the mock joins are explicitly gated
+        # broadcasts — so AQE's per-query-stage job submissions only added
+        # driver latency (measured r6: 39.8 -> 18.3 jobs/epoch, wall
+        # flat-to-better; OPTIMIZATION_r06.md).  The session is shared, so
+        # both settings are restored even when an epoch raises.
+        aqe_prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        try:
+            epoch, seen, fetch_logs, documents, outputs = self._epochs(
+                epoch, frontier, seen, written, next_seq, n_frontier)
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", str(default_parts))
+            spark.conf.set("spark.sql.adaptive.enabled", aqe_prev)
+
+        empty_log = self.spark.createDataFrame(
+            [], "url string, kind string, not_before_ms bigint, status string,"
+                " attempts int, parent_seq bigint, stage_rank int, "
+                "sub_rank int, intra1 int, intra2 int, depth int, epoch int, "
+                "stage string")
+        empty_doc = self.spark.createDataFrame(
+            [], "url string, kind string, text string, media_ref string, "
+                "offset int, tag_idx int, attr string, vstart int, vend int, "
+                "token string, depth int, epoch int")
+        empty_out = self.spark.createDataFrame(
+            [], "url string, file_path string, body binary, is_page boolean, "
+                "epoch int, wpos struct<epoch:int, pos:struct<"
+                "parent_seq:bigint, stage_rank:int, sub_rank:int, "
+                "intra1:int, intra2:int>>")
+        fetch_log = _union_all(fetch_logs, empty_log)
+        docs = _union_all(documents, empty_doc)
+        # final filesystem state: the LAST writer per path in sequential
+        # write order wins, exactly like the reference's overwriting file
+        # sink (pages always overwrite; assets only write unseen paths) —
+        # one row per output file, order-insensitive.
+        out_log = _union_all(outputs, empty_out)
+        row = F.struct(*[F.col(c) for c in
+                         ("url", "file_path", "body", "is_page", "epoch")])
+        out = (out_log.groupBy("file_path")
+               .agg(F.max_by(row, F.col("wpos")).alias("_r"))
+               .select("_r.url", "file_path", "_r.body", "_r.is_page",
+                       "_r.epoch"))
+        return CrawlResult(seen=seen, fetch_log=fetch_log, documents=docs,
+                           output=out, epochs=epoch, seed_host=self.seed_host,
+                           cookies=self._final_cookies())
+
+    def _epochs(self, epoch: int, frontier: DataFrame, seen: DataFrame,
+                written: DataFrame, next_seq: int, n_frontier: int):
+        """The BFS epoch loop from ``epoch`` until the frontier empties or
+        ``max_epochs``; returns ``(epoch, seen, fetch_logs, documents,
+        outputs)``."""
+        spark = self.spark
+        cfg = self.config
+        default_parts = self._default_parts
+        fetch_logs: list[DataFrame] = []
+        documents: list[DataFrame] = []
+        outputs: list[DataFrame] = []
         self._live_fetch_cache = None
         while epoch < self.max_epochs:
             if n_frontier == 0:
@@ -524,17 +566,13 @@ class Crawler:
                     lambda: self._localckpt(meta_lazy, "fetched_meta"))
             else:
                 processed = self._localckpt(processed_lazy, "processed")
-            pages_ok_meta = fetched_meta.filter(F.col("status") == "ok")
 
-            page_meta = pages_ok_meta.select(
-                F.col("page_url"), F.col("seq").alias("parent_seq"),
-                F.col("depth"))
+            # every frontier row of an epoch has depth == epoch (seed 0,
+            # next_pages depth + 1, resume returns its frontier's epoch)
             full_spans = extract_spans_df(page_bodies, include_text=True)
-            documents.append(full_spans.join(
-                page_meta.select("page_url", "depth"),
-                full_spans["url"] == page_meta["page_url"], "left")
-                .drop("page_url")
-                .withColumn("epoch", F.lit(epoch)))
+            documents.append(full_spans
+                             .withColumn("depth", F.lit(epoch))
+                             .withColumn("epoch", F.lit(epoch)))
 
             # file paths the ok pages of this epoch write (the "filesystem
             # state" the fileExists check consults, download.go:76-79) fall
@@ -548,16 +586,7 @@ class Crawler:
             page_paths_d = self._deferred(lambda: self._localckpt(
                 processed.select("file_path", "seq"), "page_paths"))
 
-            if n_frontier <= self.CANDIDATES_BROADCAST_MAX:
-                # shuffle-free: per-tag arrays built on the page row, tiny
-                # meta broadcast (see _candidates_fast)
-                candidates = self._candidates_fast(processed, page_meta)
-            else:
-                # beyond the broadcast gate: the explode + re-aggregate
-                # shape (equivalent rows; shuffles on url)
-                spans = (processed.select("url", F.explode("refs").alias("r"))
-                         .select("url", "r.*"))
-                candidates = self._base_candidates(spans, page_meta)
+            candidates = self._candidates(processed, epoch)
             if epoch == 0 and cfg.use_sitemaps:
                 sm_cands = self._sitemap_candidates()
                 if sm_cands is not None:
@@ -599,7 +628,7 @@ class Crawler:
             # just-checkpointed inserts/assets_allowed): the asset fetch,
             # the next-frontier sequence assignment, and the Bloom build.
             # Overlapped (§2.6) so each branch's driver latency and stage
-            # tails back-fill the others; sequential under GOSCRAPE_PARALLEL=0.
+            # tails back-fill the others.
             delta = inserts.select("dedup_key") \
                            .withColumn("epoch", F.lit(epoch + 1))
 
@@ -612,13 +641,16 @@ class Crawler:
                 # to reference the BODY-bearing asset_fetch blocks, so every
                 # later epoch's fileExists anti-join re-deserialized all
                 # prior epochs' asset payloads just to read file_path.  One
-                # tiny checkpoint per epoch keeps the chain body-free.
+                # tiny checkpoint per epoch keeps the chain body-free.  Its
+                # row count rides the checkpoint's own job (Observation).
+                n_wd = Observation()
                 wd = self._localckpt(
                     page_paths_d.get().select("file_path").unionByName(
                         af.filter(F.col("status") == "ok")
-                          .select("file_path")),
+                          .select("file_path"))
+                    .observe(n_wd, F.count(F.lit(1)).alias("n")),
                     "written_delta")
-                return af, wd
+                return af, wd, n_wd.get["n"]
 
             def _seq_branch():
                 # next frontier: page survivors ordered by the composite key
@@ -643,7 +675,7 @@ class Crawler:
                     # distributed per-partition build, OR-merged driver-side
                     self.bloom.add_keys_df(delta)
 
-            (asset_fetch, written_delta), (next_pages, n_next), _ = \
+            (asset_fetch, written_delta, n_written), (next_pages, n_next), _ = \
                 self._parallel(_assets_branch, _seq_branch, _bloom_branch)
             fetch_logs.append(page_log)
             fetch_logs.append(asset_fetch.drop("body", "file_path"))
@@ -664,12 +696,7 @@ class Crawler:
             # (built in _assets_branch) — duplicates are harmless for the
             # anti-join, so no distinct shuffle.
             written = written.unionByName(written_delta)
-            if self._fs_obs is not None:
-                # overestimate: every frontier page + every allowed asset
-                self._written_rows += n_frontier + \
-                    int(self._fs_obs.get["n_allowed"])
-            else:
-                self._written_rows = self.WRITTEN_BROADCAST_MAX + 1
+            self._written_rows += n_written
 
             # seen append (insert-before-reject: ALL admitted keys).  The
             # first-wins window already guarantees one row per key, so no
@@ -708,41 +735,7 @@ class Crawler:
                 seen = self._localckpt(seen, "seen_compact")
                 written = self._localckpt(written, "written_compact")
             epoch += 1
-
-        spark.conf.set("spark.sql.shuffle.partitions", str(default_parts))
-        if aqe_prev is not None:
-            spark.conf.set("spark.sql.adaptive.enabled", aqe_prev)
-
-        empty_log = self.spark.createDataFrame(
-            [], "url string, kind string, not_before_ms bigint, status string,"
-                " attempts int, parent_seq bigint, stage_rank int, "
-                "sub_rank int, intra1 int, intra2 int, depth int, epoch int, "
-                "stage string")
-        empty_doc = self.spark.createDataFrame(
-            [], "url string, kind string, text string, media_ref string, "
-                "offset int, tag_idx int, attr string, vstart int, vend int, "
-                "token string, depth int, epoch int")
-        empty_out = self.spark.createDataFrame(
-            [], "url string, file_path string, body binary, is_page boolean, "
-                "epoch int, wpos struct<epoch:int, pos:struct<"
-                "parent_seq:bigint, stage_rank:int, sub_rank:int, "
-                "intra1:int, intra2:int>>")
-        fetch_log = _union_all(fetch_logs, empty_log)
-        docs = _union_all(documents, empty_doc)
-        # final filesystem state: the LAST writer per path in sequential
-        # write order wins, exactly like the reference's overwriting file
-        # sink (pages always overwrite; assets only write unseen paths) —
-        # one row per output file, order-insensitive.
-        out_log = _union_all(outputs, empty_out)
-        row = F.struct(*[F.col(c) for c in
-                         ("url", "file_path", "body", "is_page", "epoch")])
-        out = (out_log.groupBy("file_path")
-               .agg(F.max_by(row, F.col("wpos")).alias("_r"))
-               .select("_r.url", "file_path", "_r.body", "_r.is_page",
-                       "_r.epoch"))
-        return CrawlResult(seen=seen, fetch_log=fetch_log, documents=docs,
-                           output=out, epochs=epoch, seed_host=self.seed_host,
-                           cookies=self._final_cookies())
+        return epoch, seen, fetch_logs, documents, outputs
 
     def _final_cookies(self) -> list[dict]:
         """Live (non-expired) session cookies, like Scraper.Cookies()
@@ -757,29 +750,18 @@ class Crawler:
         sim = Simulator(config=self.config, pages={})
         return sim.should_download(self.seed, 0, False)
 
-    _TIMING = os.environ.get("GOSCRAPE_TIMING", "") == "1"
-
     # Overlap INDEPENDENT epoch actions (guide §2.6: actions are only
     # sequential because driver code calls them sequentially): each thunk's
     # jobs back-fill executors freed by the others' stage tails, and the
     # ~50-100 ms per-job driver latency of the epoch's bookkeeping actions
     # overlaps instead of summing.  InheritableThread propagates the JVM
     # thread-locals (job group), so bench job accounting still sees every
-    # job.  GOSCRAPE_PARALLEL=0 restores the sequential loop.
-    _PARALLEL = os.environ.get("GOSCRAPE_PARALLEL", "1") == "1"
+    # job.
 
     def _deferred(self, fn):
         """Start ``fn`` on an InheritableThread now; ``.get()`` joins and
         returns its result (re-raising any failure).  Used to overlap a
         checkpoint whose consumer is several actions downstream."""
-        if not self._PARALLEL:
-            class _Now:
-                def __init__(self, v):
-                    self._v = v
-
-                def get(self):
-                    return self._v
-            return _Now(fn())
         from pyspark import InheritableThread
 
         box: dict = {}
@@ -803,10 +785,8 @@ class Crawler:
 
     def _parallel(self, *thunks):
         """Run callables concurrently in InheritableThreads; return their
-        results in order.  Falls back to sequential execution when disabled
-        or for a single thunk."""
-        if not self._PARALLEL or len(thunks) == 1:
-            return [t() for t in thunks]
+        results in order once all have finished (re-raising the first
+        failure)."""
         from pyspark import InheritableThread
         results: list = [None] * len(thunks)
         errors: list = []
@@ -835,8 +815,6 @@ class Crawler:
         out = df.localCheckpoint(eager=True)
         dt = time.time() - t0
         self.stage_secs[label] = self.stage_secs.get(label, 0.0) + dt
-        if self._TIMING:
-            print(f"    ckpt[{label}]: {dt:.2f}s", flush=True)
         return out
 
     def _do_fetch_cached(self, urls: DataFrame) -> DataFrame:
@@ -854,11 +832,8 @@ class Crawler:
                   approx_rows: int | None = None) -> DataFrame:
         """The fetch seam: (url) -> (url, body, resp_url, status, attempts).
 
-        Mock mode: J2 fixture join + S2 retry outcome as columns (the
-        reference retries 429s inline with linear backoff,
-        scraper/http.go:50-96, so retry outcomes never change crawl order —
-        we compute them directly: ok when retry_after <= max_retries, else
-        exhausted after max_retries+1 attempts).
+        Mock mode: J2 fixture join + S2 retry outcome as columns
+        (``_mock_outcome``).
         Live mode: per-host applyInPandas HTTP batches (sources/fetch.py)
         with the same schema and real inline backoff + politeness sleeps."""
         if self.live:
@@ -882,7 +857,6 @@ class Crawler:
                 self._session_cookies[
                     (d["domain"], d["path"], d["name"])] = d
             return fetched.drop("set_cookies")
-        maxr = self.config.max_retries
         if self._mock_broadcastable(approx_rows):
             # Broadcast plan: the frontier/asset url set is the SMALL side,
             # but outer joins can only broadcast the build (non-preserved)
@@ -894,7 +868,7 @@ class Crawler:
             # fallback for oversized url sets.
             hit = self.pages.join(F.broadcast(urls.select("url")),
                                   on="url", how="inner")
-            hit_f = self._mock_fetch_select(hit, maxr)
+            hit_f = self._mock_fetch_select(hit)
             miss = urls.select("url").join(
                 F.broadcast(self._pages_slim().select("url")),
                 on="url", how="left_anti")
@@ -904,21 +878,33 @@ class Crawler:
                 F.lit("missing").alias("status"), F.lit(1).alias("attempts"))
             return hit_f.unionByName(miss_f)
         joined = urls.select("url").join(self.pages, on="url", how="left")
-        return self._mock_fetch_select(joined, maxr)
+        return self._mock_fetch_select(joined)
 
-    @staticmethod
-    def _mock_fetch_select(joined: DataFrame, maxr: int) -> DataFrame:
+    def _mock_outcome(self, has_body):
+        """``(status, attempts)`` columns of a mock fetch.  The reference
+        retries 429s inline with linear backoff (scraper/http.go:50-96), so
+        retry outcomes never change crawl order and are computed directly:
+        'missing' after 1 attempt without a body, 'exhausted' after
+        max_retries + 1 attempts when retry_after > max_retries, else 'ok'
+        after retry_after + 1 attempts."""
+        maxr = self.config.max_retries
+        exhausted = F.col("retry_after") > maxr
+        status = (F.when(~has_body, F.lit("missing"))
+                  .when(exhausted, F.lit("exhausted"))
+                  .otherwise(F.lit("ok")))
+        attempts = (F.when(~has_body, F.lit(1))
+                    .when(exhausted, F.lit(maxr + 1))
+                    .otherwise(F.coalesce(F.col("retry_after"), F.lit(0)) + 1))
+        return status, attempts
+
+    def _mock_fetch_select(self, joined: DataFrame) -> DataFrame:
+        status, attempts = self._mock_outcome(F.col("body").isNotNull())
         return joined.select(
             F.col("url"),
-            F.when(F.col("retry_after") <= maxr, F.col("body")).alias("body"),
+            F.when(F.col("retry_after") <= self.config.max_retries,
+                   F.col("body")).alias("body"),
             F.coalesce(F.col("resp_url"), F.col("url")).alias("resp_url"),
-            F.when(F.col("body").isNull(), F.lit("missing"))
-             .when(F.col("retry_after") > maxr, F.lit("exhausted"))
-             .otherwise(F.lit("ok")).alias("status"),
-            F.when(F.col("body").isNull(), F.lit(1))
-             .when(F.col("retry_after") > maxr, F.lit(maxr + 1))
-             .otherwise(F.coalesce(F.col("retry_after"), F.lit(0)) + 1)
-             .alias("attempts"))
+            status.alias("status"), attempts.alias("attempts"))
 
     # frontier rows above this fall back from the broadcast mock-fetch plan
     # to the co-partitioned shuffle join (a broadcast hash of the epoch's
@@ -930,8 +916,7 @@ class Crawler:
     # on bytes, not rows — 5M rows of realistic (~60-120 B) URLs is a
     # multi-hundred-MB build that can OOM small executors.  Estimate =
     # raw url bytes + per-row hash-entry overhead.
-    PAGES_BROADCAST_MAX_BYTES = int(os.environ.get(
-        "GOSCRAPE_PAGES_BROADCAST_MAX_BYTES", 128 << 20))
+    PAGES_BROADCAST_MAX_BYTES = 128 << 20
     _BROADCAST_ROW_OVERHEAD = 48
 
     def _mock_broadcastable(self, approx_rows: int | None = None) -> bool:
@@ -953,9 +938,6 @@ class Crawler:
                 "retry_after", "resp_url").localCheckpoint(eager=True)
         return self._pages_slim_df
 
-    def _pages_rows(self) -> int:
-        return self._pages_stats()[0]
-
     def _pages_stats(self) -> tuple[int, int]:
         """(row count, sum of url lengths) over the slim checkpoint — one
         job, cached for the crawl; sizes the broadcast gate on BYTES."""
@@ -971,59 +953,44 @@ class Crawler:
         est = url_bytes + rows * self._BROADCAST_ROW_OVERHEAD
         return est <= self.PAGES_BROADCAST_MAX_BYTES
 
-    def _mock_status(self, urls: DataFrame) -> DataFrame:
-        """(url, status) for mock mode WITHOUT touching body blocks — the
-        fileExists collision check needs outcomes only."""
-        return self._attach_mock_status(urls).select("url", "status")
-
     def _attach_mock_status(self, df: DataFrame) -> DataFrame:
         """Append a ``status`` column to any url-keyed frame via the
         body-free slim fixture table (broadcast when it fits — a left join
-        against the unique-url slim side never fans out)."""
-        maxr = self.config.max_retries
+        against the unique-url slim side never fans out).  The fileExists
+        collision check needs outcomes only, never the body blocks."""
         slim = self._pages_slim().select("url", "has_body", "retry_after")
         if self._pages_broadcastable():
             slim = F.broadcast(slim)
+        status, _ = self._mock_outcome(
+            F.coalesce(F.col("has_body"), F.lit(False)))
         return (df.join(slim, on="url", how="left")
-                .withColumn(
-                    "status",
-                    F.when(~F.coalesce(F.col("has_body"), F.lit(False)),
-                           F.lit("missing"))
-                     .when(F.col("retry_after") > maxr, F.lit("exhausted"))
-                     .otherwise(F.lit("ok")))
+                .withColumn("status", status)
                 .drop("has_body", "retry_after"))
 
     def _fetch_meta(self, frontier: DataFrame) -> DataFrame:
         """Body-FREE fetch metadata for the mock seam: the per-epoch
-        ``fetched_meta`` checkpoint only feeds the fetch log and the
-        candidate page_meta, yet it used to be derived from the full
-        body-bearing fetch join — materializing it re-read every fixture
-        body block each epoch just to drop the column (checkpoint blocks
-        don't support projection pushdown).  This joins the frontier
+        ``fetched_meta`` checkpoint only feeds the fetch log, so deriving
+        it from the full body-bearing fetch join would re-read every
+        fixture body block each epoch just to drop the column (checkpoint
+        blocks don't support projection pushdown).  This joins the frontier
         against the slim (url, has_body, retry_after, resp_url) table
-        instead: identical rows (same when-chains as _mock_fetch_select /
-        _fetch), ~KB-scale scan instead of the full fixture (guide §2.3:
-        project before you materialize).  Column order matches
-        ``_fetch(...).drop('body')`` exactly."""
-        maxr = self.config.max_retries
+        instead: identical rows (same ``_mock_outcome``), ~KB-scale scan
+        instead of the full fixture (guide §2.3: project before you
+        materialize).  Column order matches ``_fetch(...).drop('body')``
+        exactly."""
         slim = self._pages_slim()
         if self._pages_broadcastable():
             slim = F.broadcast(slim)
         joined = frontier.select("url", "depth", "seq").join(
             slim, on="url", how="left")
-        has_body = F.coalesce(F.col("has_body"), F.lit(False))
+        status, attempts = self._mock_outcome(
+            F.coalesce(F.col("has_body"), F.lit(False)))
         return joined.select(
             F.col("url").alias("req_url"),
             F.col("url").alias("page_url"),
             F.coalesce(F.col("resp_url"), F.col("url")).alias("resp_url"),
             F.col("depth"), F.col("seq"),
-            F.when(~has_body, F.lit("missing"))
-             .when(F.col("retry_after") > maxr, F.lit("exhausted"))
-             .otherwise(F.lit("ok")).alias("status"),
-            F.when(~has_body, F.lit(1))
-             .when(F.col("retry_after") > maxr, F.lit(maxr + 1))
-             .otherwise(F.coalesce(F.col("retry_after"), F.lit(0)) + 1)
-             .alias("attempts"))
+            status.alias("status"), attempts.alias("attempts"))
 
     def _fetch(self, frontier: DataFrame, epoch: int) -> DataFrame:
         fetched = self._do_fetch(frontier.select("url"),
@@ -1062,43 +1029,33 @@ class Crawler:
                        F.lit(row.resp_url)).otherwise(F.col("page_url")))
         return fetched
 
-    # frontier sizes above this fall back from the shuffle-free candidate
-    # fast path (per-page array ops + broadcast page-meta join) to the
-    # explode + re-aggregate shape: the broadcast side is one small row per
-    # frontier page, so the gate bounds executor memory like the mock gate
-    CANDIDATES_BROADCAST_MAX = int(os.environ.get(
-        "GOSCRAPE_CAND_BROADCAST_MAX", 2_000_000))
-
     # written-path rows above this fall back from the broadcast fileExists
     # anti-join (neither side shuffles) to the shuffle join; the loop
-    # tracks a safe overestimate (pages + allowed assets per epoch).  At
-    # production scale `written` is bucketed by file_path instead.
-    WRITTEN_BROADCAST_MAX = int(os.environ.get(
-        "GOSCRAPE_WRITTEN_BROADCAST_MAX", 1_000_000))
+    # counts written's rows exactly.  At production scale `written` is
+    # bucketed by file_path instead.
+    WRITTEN_BROADCAST_MAX = 1_000_000
 
-    def _candidates_fast(self, processed: DataFrame,
-                         page_meta: DataFrame) -> DataFrame:
-        """_base_candidates without the explode + re-aggregate shuffle.
+    @staticmethod
+    def _candidates(processed: DataFrame, epoch: int) -> DataFrame:
+        """Ranks 1-4 (link/script/body/style assets), 5 (img refs), 6
+        (a-links) of each processed page, in CAND_SCHEMA columns.  Per-tag
+        lists are distinct + lexicographically sorted (A2,
+        htmlindex.go:67-89).
 
-        The fused pass already returns refs AS AN ARRAY PER PAGE;
-        _base_candidates explodes them into one row per ref and then
-        groupBy(url)s them straight back into per-tag arrays — at the
-        100k-page bench epoch that is a ~2M-row, every-ref-column shuffle
-        per epoch to recompute locality the data already had (guide §2.4:
-        remove shuffles outright).  This path builds the per-tag distinct
-        sorted arrays with array functions on the page row (no exchange)
-        and broadcast-joins the tiny (page_url, parent_seq, depth) meta.
-        Row-identical to _base_candidates (pinned by
-        tests/test_round6_candidates_fast.py): filter+array_distinct+
-        array_sort ≡ collect_set(when(...))+array_sort per tag, pages
-        with no refs contribute zero rows through either shape, and the
-        per-tag intra1 indices come from the same sorted arrays."""
+        The fused pass already returns refs AS AN ARRAY PER PAGE, so the
+        per-tag arrays are built with array functions on the page row and
+        exploded JVM-side in stage-rank order: a pure per-row projection
+        plus explode, no shuffle or broadcast at any frontier size (guide
+        §2.4).  Pages with no refs contribute zero rows."""
         from ..operators.extract import TAG_BY_KIND
 
         tag_expr = F.create_map(*[F.lit(x) for kv in TAG_BY_KIND.items()
                                   for x in kv])
 
         def refs_for(tag: str):
+            # media_ref leads the struct so array_sort orders by the full
+            # reference string WITH fragment, exactly like the index's
+            # sort.Strings over resolved URLs (htmlindex.go:73-77)
             return F.array_sort(F.array_distinct(F.transform(
                 F.filter(
                     F.col("refs"),
@@ -1112,68 +1069,9 @@ class Crawler:
                     r["path"].alias("path"),
                     r["dedup_key"].alias("dedup_key")))))
 
-        per_page = processed.select(
-            "url",
-            refs_for("link").alias("link"), refs_for("script").alias("script"),
-            refs_for("body").alias("body"), refs_for("style").alias("style"),
-            refs_for("img").alias("img"), refs_for("a").alias("a"))
-        pm = F.broadcast(page_meta)
-        per_page = per_page.join(
-            pm, per_page["url"] == pm["page_url"], "inner").drop("url")
-        return self._stage_explode(per_page)
-
-    # ------------------------------------------------------------------
-    def _base_candidates(self, spans: DataFrame, page_meta: DataFrame) -> DataFrame:
-        """Ranks 1-4 (link/script/body/style assets), 5 (images: body dups +
-        img refs), 6 (a-links) from the span table.  Per-tag lists are
-        distinct + lexicographically sorted (A2, htmlindex.go:67-89).
-
-        Physical shape: ONE hash aggregate (conditional collect_set per tag),
-        one join to page metadata, one generate (explode of a concatenated
-        struct array) — no pivot, no 6-way union scan."""
-        from ..operators.extract import TAG_BY_KIND
-
-        tag_expr = F.create_map(*[F.lit(x) for kv in TAG_BY_KIND.items()
-                                  for x in kv])[F.col("kind")]
-        tagged = (spans.filter(F.col("media_ref") != "")
-                  .withColumn("tag", tag_expr)
-                  .filter(F.col("tag").isNotNull()))
-
-        # media_ref leads the struct so array_sort orders by the full
-        # reference string WITH fragment, exactly like the index's
-        # sort.Strings over resolved URLs (htmlindex.go:73-77)
-        ref_struct = F.struct("media_ref", "ref_no_frag", "scheme", "host",
-                              "path", "dedup_key")
-        empty = ("array<struct<media_ref:string,ref_no_frag:string,"
-                 "scheme:string,host:string,path:string,dedup_key:string>>")
-
-        def refs(tag: str):
-            return F.coalesce(
-                F.array_sort(F.collect_set(
-                    F.when(F.col("tag") == tag, ref_struct))),
-                F.array().cast(empty))
-
-        per_page = (tagged.groupBy("url")
-                    .agg(refs("link").alias("link"),
-                         refs("script").alias("script"),
-                         refs("body").alias("body"),
-                         refs("style").alias("style"),
-                         refs("img").alias("img"),
-                         refs("a").alias("a")))
-
-        pm = page_meta
-        per_page = per_page.join(
-            pm, per_page["url"] == pm["page_url"], "inner").drop("url")
-        return self._stage_explode(per_page)
-
-    @staticmethod
-    def _stage_explode(per_page: DataFrame) -> DataFrame:
-        """Shared tail of the two candidate builders: per-tag sorted arrays
-        -> one concatenated struct array -> JVM-side explode in stage-rank
-        order (CAND_SCHEMA columns)."""
-        def stage(col, rank: int, is_asset: bool, stage_name: str):
+        def stage(tag: str, rank: int, is_asset: bool, stage_name: str):
             return F.transform(
-                col, lambda x, i: F.struct(
+                refs_for(tag), lambda x, i: F.struct(
                     F.lit(rank).alias("stage_rank"),
                     F.lit(0).alias("sub_rank"),
                     i.alias("intra1"),
@@ -1183,6 +1081,8 @@ class Crawler:
                     x["host"].alias("host"),
                     x["path"].alias("path"),
                     F.lit(is_asset).alias("is_asset"),
+                    # every frontier row of epoch e has depth e, so no join
+                    F.lit(epoch).alias("depth"),
                     F.lit(stage_name).alias("stage"),
                     x["dedup_key"].alias("dedup_key")))
 
@@ -1194,28 +1094,18 @@ class Crawler:
         # shrinks the admission shuffle.  5b/5c relative order is preserved
         # via sub_rank (0 = queued images, 1 = css-discovered).
         cands = F.concat(
-            stage(F.col("link"), 1, True, "link"),
-            stage(F.col("script"), 2, True, "script"),
-            stage(F.col("body"), 3, True, "body"),
-            stage(F.col("style"), 4, True, "style"),
-            stage(F.col("img"), 5, True, "image"),
-            stage(F.col("a"), 6, False, "a"))
+            stage("link", 1, True, "link"),
+            stage("script", 2, True, "script"),
+            stage("body", 3, True, "body"),
+            stage("style", 4, True, "style"),
+            stage("img", 5, True, "image"),
+            stage("a", 6, False, "a"))
 
-        return (per_page
-                .select("page_url", "parent_seq", "depth",
+        return (processed
+                .select(F.col("url").alias("page_url"),
+                        F.col("seq").alias("parent_seq"),
                         F.explode(cands).alias("c"))
-                .select("page_url", "parent_seq",
-                        F.col("c.stage_rank").alias("stage_rank"),
-                        F.col("c.sub_rank").alias("sub_rank"),
-                        F.col("c.intra1").alias("intra1"),
-                        F.col("c.intra2").alias("intra2"),
-                        F.col("c.url").alias("url"),
-                        F.col("c.scheme").alias("scheme"),
-                        F.col("c.host").alias("host"),
-                        F.col("c.path").alias("path"),
-                        F.col("c.is_asset").alias("is_asset"), F.col("depth"),
-                        F.col("c.stage").alias("stage"),
-                        F.col("c.dedup_key").alias("dedup_key")))
+                .select("page_url", "parent_seq", "c.*"))
 
     # ------------------------------------------------------------------
     def _admission_fixpoint(self, candidates: DataFrame, seen: DataFrame,
@@ -1306,6 +1196,16 @@ class Crawler:
                         F.lit(0).alias("intra1"),
                         F.lit(0).alias("intra2"))
 
+    @classmethod
+    def _first_per_path(cls, assets: DataFrame):
+        """``(kept, deferred)``: the first-considered asset per file_path,
+        and every later one (live fileExists chain)."""
+        pos = cls._pos()
+        first = assets.groupBy("file_path").agg(F.min(pos).alias("_first"))
+        j = assets.join(first, "file_path", "left")
+        return (j.filter(pos == F.col("_first")).drop("_first"),
+                j.filter(pos != F.col("_first")).drop("_first"))
+
     def _fs_admit(self, assets: DataFrame, page_paths: DataFrame,
                   written: DataFrame):
         """fileExists admission (scraper/download.go:76-79): drop admitted
@@ -1323,12 +1223,11 @@ class Crawler:
         ``_fetch_assets`` re-admits deferred candidates whose predecessors
         all failed (the sequential chain, one wave per failure depth)."""
         aw = self._with_asset_paths(assets)
-        if self.live or self._pages_rows() > 5_000_000:
-            # checkpoint: here aw feeds several consumers (live: dup agg +
-            # anti + semi; big-mock: the distinct url set + the status
-            # join) — the C8 path expressions + Python fallback union would
-            # otherwise recompute per consumer.  The small-mock fast path
-            # below consumes aw exactly once, so it skips the checkpoint.
+        if self.live:
+            # checkpoint: live, aw feeds several consumers (dup agg + anti +
+            # semi) — the C8 path expressions + Python fallback union would
+            # otherwise recompute per consumer.  The mock path below
+            # consumes aw once, so it skips the checkpoint.
             aw = self._localckpt(aw, "asset_paths")
         pos = self._pos()
         page_w = page_paths.select("file_path", self._page_pos().alias("pos"))
@@ -1356,8 +1255,7 @@ class Crawler:
             # its anti-join needs no exchange on either side (guide §3.1);
             # past the gate the shuffle join stands (production: bucketed)
             wr = written
-            if getattr(self, "_written_rows", None) is not None \
-                    and self._written_rows <= self.WRITTEN_BROADCAST_MAX:
+            if self._written_rows <= self.WRITTEN_BROADCAST_MAX:
                 wr = F.broadcast(written)
             fresh = aw.join(wr, "file_path", "left_anti")
             # Page writes only matter inside window groups that contain at
@@ -1372,15 +1270,9 @@ class Crawler:
             if self._n_frontier <= 200_000:
                 page_w = page_w.join(F.broadcast(aw.select("file_path")),
                                      "file_path", "left_semi")
-                # status via the body-free slim table (broadcast join — the
-                # collision logic never needs the payload bytes)
-                cs = self._attach_mock_status(fresh)
-            else:
-                st = (self._do_fetch(fresh.select("url").distinct())
-                      .select("url", "status"))
-                cs = (fresh.join(st, on="url", how="left")
-                      .withColumn("status", F.coalesce(F.col("status"),
-                                                       F.lit("missing"))))
+            # status via the body-free slim table — the collision logic
+            # never needs the payload bytes
+            cs = self._attach_mock_status(fresh)
             rows = (cs.withColumn("_pos", pos)
                     .withColumn("_is_asset", F.lit(True))
                     .unionByName(
@@ -1421,10 +1313,7 @@ class Crawler:
                      .join(pw_first, "file_path", "left")
                      .filter(F.col("_pw").isNull() | (pos < F.col("_pw")))
                      .drop("_pw"))
-        first_pos = unblocked.groupBy("file_path").agg(F.min(pos).alias("_first"))
-        j = unblocked.join(first_pos, "file_path", "left")
-        kept = j.filter(pos == F.col("_first")).drop("_first")
-        deferred = j.filter(pos != F.col("_first")).drop("_first")
+        kept, deferred = self._first_per_path(unblocked)
         deferred = self._localckpt(deferred, "assets_deferred")
         if deferred.isEmpty():
             deferred = None
@@ -1439,8 +1328,6 @@ class Crawler:
         link-asset signature — previously two extra driver jobs per epoch.
         bit_xor, not sum: the signature only needs order-insensitivity,
         and summing xxhash64 values overflows under ANSI mode."""
-        from pyspark.sql import Observation
-
         obs = Observation()
         link = F.col("stage_rank") == 1
         out = allowed.observe(
@@ -1598,11 +1485,8 @@ class Crawler:
                 "asset_deferred")
             if deferred.isEmpty():
                 break
-            pos = self._pos()
-            first = deferred.groupBy("file_path").agg(F.min(pos).alias("_first"))
-            j = deferred.join(first, "file_path", "left")
-            cur = self._schedule(j.filter(pos == F.col("_first")).drop("_first"))
-            deferred = j.filter(pos != F.col("_first")).drop("_first")
+            cur, deferred = self._first_per_path(deferred)
+            cur = self._schedule(cur)
         out = rounds[0]
         for r in rounds[1:]:
             out = out.unionByName(r)

@@ -175,3 +175,36 @@ def test_parity_asset_vs_page_conflict(spark):
                              pages)
     kinds = {(f.url, f.kind) for f in sim.fetches}
     assert ("https://example.org/style.css", "asset") in kinds
+
+
+def test_parity_candidate_shapes(spark):
+    """Candidates come straight from the fused pass's per-page ref arrays:
+    every stage rank (link, script, body, style, img, a) with unsorted and
+    duplicate refs, a page with no refs, and a binary page, over three
+    depths (the candidate depth is the epoch number)."""
+    from goscrape_spark.plans.simulator import PageFixture
+    pages = {
+        "https://example.org/": (
+            '<html><head><link href="/b.css" rel="stylesheet">'
+            '<link href="/a.css" rel="stylesheet">'
+            '<script src="/s2.js"></script><script src="/s1.js"></script>'
+            '<script src="/s1.js"></script>'
+            "<style>h1 { background: url('/st.png'); }</style></head>"
+            '<body background="/bg.gif"><img src="/i2.png">'
+            '<img src="/i1.png"><img src="/i1.png"><img src="/i1.png#f">'
+            '<a href="/plain">p</a><a href="/bin">b</a>'
+            '<a href="/plain">again</a><a href="/deep">d</a></body></html>'),
+        "https://example.org/plain": "<html><p>no refs</p></html>",
+        "https://example.org/bin": PageFixture(body=b"\x89PNG\r\n\x1a\nxx"),
+        "https://example.org/deep": ('<img src="/i3.png"><img src="/i1.png">'
+                                     '<a href="/leaf">l</a>'),
+        "https://example.org/leaf": "<html>leaf</html>",
+    }
+    for asset in ("a.css", "b.css", "s1.js", "s2.js", "st.png", "bg.gif",
+                  "i1.png", "i2.png", "i3.png"):
+        pages[f"https://example.org/{asset}"] = f"asset {asset}"
+    sim, _ = assert_parity(spark, CrawlConfig(url="https://example.org/"),
+                           pages)
+    assert "/leaf" in sim.seen
+    assert_parity(spark, CrawlConfig(url="https://example.org/", max_depth=1),
+                  pages)

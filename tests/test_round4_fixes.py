@@ -53,7 +53,7 @@ def test_mock_status_touches_no_body_column(spark):
     read the body-free slim table, not the body-bearing fixture."""
     c = _crawler(spark)
     urls = spark.createDataFrame([(SITE_LINKS_START,)], "url string")
-    st = c._mock_status(urls)
+    st = c._attach_mock_status(urls).select("url", "status")
     plan = st._jdf.queryExecution().executedPlan().toString()
     assert "has_body" in plan
     # no bare body column reference anywhere (has_body is the slim flag)
@@ -62,8 +62,8 @@ def test_mock_status_touches_no_body_column(spark):
     # SITE_LINKS_START carries a #fragment, which is not a fixture key —
     # exactly the "missing" outcome; a real fixture url must be "ok"
     assert row[SITE_LINKS_START] == "missing"
-    ok = c._mock_status(spark.createDataFrame(
-        [("https://example.org/",)], "url string"))
+    ok = c._attach_mock_status(spark.createDataFrame(
+        [("https://example.org/",)], "url string")).select("url", "status")
     assert ok.first().status == "ok"
 
 
@@ -73,10 +73,28 @@ def test_mock_status_matches_do_fetch(spark):
     c = _crawler(spark)
     urls = c.pages.select("url").unionByName(spark.createDataFrame(
         [("https://example.org/missing-page",)], "url string"))
-    slim = {r.url: r.status for r in c._mock_status(urls).collect()}
+    slim = {r.url: r.status for r in
+            c._attach_mock_status(urls).select("url", "status").collect()}
     full = {r.url: r.status for r in
             c._do_fetch(urls).select("url", "status").collect()}
     assert slim == full
+
+
+def test_candidates_plan_has_no_exchange_or_broadcast(spark):
+    """Candidates are a per-row projection + explode of the fused pass's
+    per-page refs: from a checkpointed ``processed`` frame the plan has no
+    shuffle and no broadcast join, whatever the frontier size."""
+    from goscrape_spark.operators.extract import process_pages_df
+
+    bodies = pages_df(spark, SITE_LINKS).select(
+        "url", "body", F.monotonically_increasing_id().alias("seq"))
+    processed = process_pages_df(bodies, "example.org", "") \
+        .localCheckpoint(eager=True)
+    cands = Crawler._candidates(processed, 1)
+    plan = cands._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan
+    assert "BroadcastHashJoin" not in plan
+    assert cands.count() > 0
 
 
 def test_global_sequence_with_total_counts(spark):

@@ -35,16 +35,17 @@ def test_pages_broadcast_gate_is_byte_sized(spark):
 
 
 def test_mock_status_falls_back_without_broadcast(spark):
-    """With the byte gate closed, _mock_status must still produce the same
-    statuses through the shuffle join (no broadcast hint in the plan)."""
+    """With the byte gate closed, _attach_mock_status must still produce the
+    same statuses through the shuffle join (no broadcast hint in the plan)."""
     c = _crawler(spark)
     urls = c.pages.select("url").unionByName(spark.createDataFrame(
         [("https://example.org/missing-page",)], "url string"))
-    want = {r.url: r.status for r in c._mock_status(urls).collect()}
+    want = {r.url: r.status for r in
+            c._attach_mock_status(urls).select("url", "status").collect()}
 
     c2 = _crawler(spark)
     c2.PAGES_BROADCAST_MAX_BYTES = 0
-    st = c2._mock_status(urls)
+    st = c2._attach_mock_status(urls).select("url", "status")
     plan = st._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" not in plan
     got = {r.url: r.status for r in st.collect()}

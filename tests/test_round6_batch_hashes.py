@@ -19,6 +19,7 @@ TEXTS = [
     (6, "unicode nbsp et em-space tokens mixed in"),
     (7, "tabs\tand\nnewlines   collapse to one split"),
     (8, "a b c d e f g h i j k l m n o p q r s t u v w x y z " * 8),
+    (9, None),                            # null text
 ]
 
 
